@@ -35,27 +35,22 @@ def _noop_write(df):
 
 
 def make_spark():
-    """Same session shape as bench.py (shuffle partitions, split size)."""
+    """Same session shape as bench.py: shuffle partitions, and the split
+    size calibrated by ``bench.calibrate_mpb`` to exactly two scan waves
+    of the bench corpus."""
+    from bench import calibrate_mpb
     from hocr_de_noising_spark.fixtures.spans import write_corpus
     from hocr_de_noising_spark.session import get_spark
 
     bench_dir = write_corpus(CACHE_DIR, "bench")
-    corpus_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(os.path.join(bench_dir, "docs.parquet"))
-        for f in fs
-    )
-    mpb = max(2 * 1024 * 1024, int(corpus_bytes / (1.75 * CPUS)))
     spark = get_spark(
         "bench-extra",
         cores=CPUS,
         shuffle_partitions=max(CPUS * 2, 16),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(mpb),
-            "spark.sql.files.openCostInBytes": "512k",
-        },
+        extra_conf={"spark.sql.files.openCostInBytes": "512k"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    calibrate_mpb(spark, os.path.join(bench_dir, "docs.parquet"), CPUS, waves=2)
     return spark, bench_dir
 
 

@@ -281,13 +281,22 @@ def run_denoise_job(
 
         # observation values are available once the write action above
         # finishes — the ONLY job this group runs. A branch AQE proved
-        # empty reports a definitive empty metrics row (= all-zero);
+        # empty reports a definitive empty metrics row ({} = all-zero);
         # pyspark's blocking Observation.get would HANG on that (ADVICE
         # r2), and a single bounded read can race the ASYNC listener
         # bus under load, so observation_metrics polls boundedly and
         # distinguishes late delivery from a pruned node (r3 review).
-        in_vals = [observation_metrics(o) or {} for o in in_obs]
-        out_vals = observation_metrics(out_obs) or {}
+        in_vals = [observation_metrics(o) for o in in_obs]
+        out_vals = observation_metrics(out_obs)
+        if out_vals is None or None in in_vals:
+            # timed out: committing would record 'done' rows with zero
+            # counts the job never observed. Fail the group instead; its
+            # buckets stay uncommitted, so a resume re-runs it (the
+            # dynamic partition overwrite makes that idempotent).
+            raise RuntimeError(
+                f"group {g}: df.observe metrics not delivered in time; "
+                "group left uncommitted — re-run to resume"
+            )
         now = int(time.time() * 1e6)
         rows = []
         for b in pending:

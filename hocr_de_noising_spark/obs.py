@@ -8,7 +8,9 @@ bounded read can also race a late-but-real delivery under a loaded
 driver. ``observation_metrics`` polls the bounded read for up to
 ``timeout_s`` seconds (the action has already finished when callers
 invoke it, so real metrics land within milliseconds ordinarily) and
-only then treats the node as never-reported.
+only then reports a timeout. A timeout (``None``) is distinct from a
+node that reported nothing (``{}``): the batch job treats the latter as
+zero counts but must not commit metrics it never observed.
 """
 
 from __future__ import annotations
@@ -19,11 +21,12 @@ from pyspark.sql import Observation
 
 
 def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
-    """Metrics dict of a finished action's Observation, or None if the
-    node never reported (pruned branch / empty plan) within timeout_s.
+    """Metrics dict of a finished action's Observation; ``{}`` if the
+    node definitively reported nothing (pruned branch / empty plan —
+    surfaces as a schema-less empty Row); ``None`` if no report arrived
+    within timeout_s.
 
-    Never blocks indefinitely. A schema-less empty Row (how a pruned
-    node surfaces) is treated the same as no row.
+    Never blocks indefinitely.
 
     The bounded JVM read needs the classic API's ``Observation._jo``;
     under Spark Connect ``Observation.__new__`` returns a
@@ -68,10 +71,10 @@ def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
             if jopt.get().size() == 0:
                 # definitive: the execution-end event arrived and this
                 # node reported nothing (pruned / empty branch)
-                return None
+                return {}
             utils = getattr(o._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
             return CPickleSerializer().loads(utils.toPyRow(jopt.get())).asDict()
         # undefined = the async listener bus has not delivered yet —
         # the caller's action already finished, so keep polling briefly
         if time.monotonic() >= deadline:
-            return None
+            return None  # timed out

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hocr_de_noising_spark.hof import let
+
 WORDS_SCHEMA = (
     "doc_id string, carea_id int, par_id int, line_id int, word_id int, "
     "order int, token string, x0 int, y0 int, x1 int, y1 int, wconf int, "
@@ -272,17 +274,6 @@ def parse_hocr_jvm(
 
     def chunk(j):  # 1-based chunk j
         return F.element_at("c", j + F.lit(1))
-
-    def let(value, body):
-        """Bind a per-row expression ONCE (HOF let-binding). Catalyst's
-        CollapseProject re-inlines single-use aliases into downstream
-        lambda bodies, where they are re-evaluated PER ARRAY ELEMENT —
-        the r5 form's per-j aggregate-over-slice re-split every chunk
-        for every line, ~2.5 s of the 8k-page bench. A 1-element array
-        + transform introduces a NamedLambdaVariable the optimizer
-        cannot inline through, so ``value`` is computed exactly once
-        per row regardless of projection collapsing."""
-        return F.element_at(F.transform(F.array(value), body), 1)
 
     def cum(counts):
         """Prefix-sum array in ONE pass: cum[k+1] = counts[1..k] summed

@@ -28,9 +28,6 @@ each other on fresh seeds (tests/test_differential.py).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,7 +45,7 @@ from hocr_de_noising_spark.operators.features import (
 from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
-from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc
+from hocr_de_noising_spark.rules_np import Lexicon
 
 OUT_SCHEMA = (
     "doc_id string, "
@@ -127,14 +124,11 @@ def denoise_fused(
     docs: DataFrame,
     lexicon_tokens: "list[str] | Broadcast",
     params: Params | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
-    """Single-pass mapInPandas variant of the frozen rule.
-
-    ``vectorized=True`` (default) runs the pandas/numpy batch engine
-    (rules_vec — one regex extract and groupby-quantile per Arrow
-    batch); ``vectorized=False`` runs the doc-at-a-time reference
-    implementation (rules_np). Identical semantics, property-tested.
+    """Single-pass mapInArrow variant of the frozen rule: each Arrow
+    batch runs the pandas/numpy batch engine
+    (rules_vec.denoise_arrow_batch — one regex extract and
+    groupby-quantile per batch), property-tested against rules_np.
 
     ``lexicon_tokens`` may be a plain list (broadcast here, once per
     plan) or a pre-made ``sparkContext.broadcast`` shared across calls —
@@ -149,33 +143,20 @@ def denoise_fused(
         else docs.sparkSession.sparkContext.broadcast(list(lexicon_tokens or []))
     )
 
-    if vectorized:
-        # Arrow-native boundary (r8, guide §4.2): spans are read flat
-        # off the list array's offset/value buffers and the output list
-        # array is rebuilt from flat survivor columns — no per-span
-        # Python dicts in either direction (the mapInPandas form built
-        # ~n_spans dicts on ingest AND emit per batch, the dominant
-        # Python cost at 200k docs). Explicit select: Spark cannot see
-        # which columns an opaque map touches, so project before it.
-        def run_arrow(batches):
-            from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
+    # Arrow-native boundary (r8, guide §4.2): spans are read flat off
+    # the list array's offset/value buffers and the output list array
+    # is rebuilt from flat survivor columns — no per-span Python dicts
+    # in either direction (the earlier mapInPandas form built ~n_spans
+    # dicts on ingest AND emit per batch, the dominant Python cost at
+    # 200k docs). Explicit select: Spark cannot see which columns an
+    # opaque map touches, so project before it.
+    def run_arrow(batches):
+        from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
 
-            lex = Lexicon(bc.value) if p.use_dictionary else None
-            for rb in batches:
-                yield denoise_arrow_batch(rb, p, lex)
-
-        return docs.select("doc_id", "spans").mapInArrow(
-            run_arrow, schema=OUT_SCHEMA
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lex = Lexicon(bc.value) if p.use_dictionary else None
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            spans_lists = [
-                list(s) if s is not None else [] for s in pdf["spans"]
-            ]
-            out_spans = [denoise_doc(s, p, lex) for s in spans_lists]
-            yield pd.DataFrame({"doc_id": ids, "spans": out_spans})
+        for rb in batches:
+            yield denoise_arrow_batch(rb, p, lex)
 
-    return docs.mapInPandas(run, schema=OUT_SCHEMA)
+    return docs.select("doc_id", "spans").mapInArrow(
+        run_arrow, schema=OUT_SCHEMA
+    )

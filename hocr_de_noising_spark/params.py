@@ -65,9 +65,6 @@ class Params:
     salt: int = 42
     max_spans_per_doc: int = 50_000   # pre-split threshold for giant docs
 
-    # Arrow batching (big docs ⇒ few rows per batch).
-    arrow_max_records_per_batch: int = 128
-
     def to_dict(self) -> dict:
         return asdict(self)
 

@@ -40,7 +40,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.queries.util import let_sql, load, register
+from hocr_de_noising_spark.hof import let_sql
+from hocr_de_noising_spark.queries.util import load, register
 
 LINE_TOKENS = 8  # synthetic line width (tokens) for the registry keys
 LINE_DF_CAP = 4  # a line present in more docs than this is boilerplate

@@ -64,8 +64,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from hocr_de_noising_spark.hof import let_sql
 from hocr_de_noising_spark.operators.multimodal import VSIG_SUM_TOL_PER_BAND
-from hocr_de_noising_spark.queries.util import let_sql, load, register
+from hocr_de_noising_spark.queries.util import load, register
 
 PSIG_PREFIX = 256  # payload units (bytes / chars) covered by the signature
 PSIG_BAND = 32  # units per band -> up to 8 bands

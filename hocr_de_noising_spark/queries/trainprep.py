@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.queries.util import let_sql, load, register
+from hocr_de_noising_spark.hof import let_sql
+from hocr_de_noising_spark.queries.util import load, register
 
 # ---------------------------------------------------------------- dedup --
 
@@ -1062,8 +1063,8 @@ def _observed_checkpoint(df, metric_col: str) -> tuple:
     SAME materialization action (VERDICT r2: fold the convergence count
     into the iteration's own action instead of a second count() job).
     Returns (checkpointed_df, changed_count_or_None); None means the
-    metrics node did not report through this action type — callers fall
-    back to an explicit count."""
+    metrics node did not report through this action type (timed out or
+    reported nothing) — callers fall back to an explicit count."""
     from pyspark.sql import Observation
 
     from hocr_de_noising_spark.obs import observation_metrics
@@ -1071,7 +1072,7 @@ def _observed_checkpoint(df, metric_col: str) -> tuple:
     o = Observation()
     ck = df.observe(o, F.sum(F.col(metric_col).cast("long")).alias("changed")).localCheckpoint()
     row = observation_metrics(o, timeout_s=5.0)
-    if row is None:
+    if not row:
         return ck, None
     val = row.get("changed")
     return ck, int(val) if val is not None else 0

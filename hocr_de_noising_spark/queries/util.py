@@ -27,19 +27,3 @@ def register(name: str, sql: str | None):
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-
-
-def let_sql(value_sql: str, var: str, body_sql: str) -> str:
-    """SQL let-binding: evaluate ``value_sql`` ONCE per row and reference
-    it as ``var`` inside ``body_sql``.
-
-    Catalyst's CollapseProject re-inlines single-use Project aliases
-    into downstream HOF lambda bodies, where they are re-evaluated PER
-    ARRAY ELEMENT — e.g. a ``split(text)`` feeding a per-element
-    ``slice(split(text), i, n)`` runs the split once per shingle, O(n²)
-    characters per document. Binding the value as a 1-element array's
-    lambda variable introduces a NamedLambdaVariable the optimizer
-    cannot inline through, so the value is computed exactly once per
-    row (measured 3.6x on the 3-gram shingle expression at sf0.1;
-    same trick as ``operators/hocr.parse_hocr_jvm``'s ``let``)."""
-    return f"element_at(transform(array({value_sql}), {var} -> {body_sql}), 1)"

@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.queries.util import let_sql, load, register
+from hocr_de_noising_spark.hof import let_sql
+from hocr_de_noising_spark.queries.util import load, register
 
 MIN_WORDS = 8  # Boilerpipe's "number of words" rule threshold
 # link density <= 1/3, kept as integer math: lw * 3 <= nw
@@ -509,7 +510,7 @@ def host_suffixes(host):
     """Column: all dot-boundary suffixes of a hostname, most-specific
     first (e.g. a.b.com -> [a.b.com, b.com, com])."""
     # let-bound label array: split the host once per row, not three
-    # times per suffix inside the lambda (util.let_sql)
+    # times per suffix inside the lambda (hof.let_sql)
     return F.expr(
         let_sql(
             f"split({host}, '\\\\.')",

@@ -4,9 +4,10 @@ Semantically identical to rules_np.denoise_doc applied to every doc of
 a batch, but vectorized across the whole Arrow batch: one regex extract
 for all spans, vectorized flag arithmetic, groupby-quantile page stats,
 and groupby-cumcount/ffill reading order + anchoring. This is what
-``denoise_fused`` executes per mapInPandas batch; equality with
-rules_np is property-tested (tests/test_vectorized.py) and both are
-held to the constructive goldens.
+``denoise_fused`` executes per mapInArrow batch
+(:func:`denoise_arrow_batch`); equality with rules_np is
+property-tested (tests/test_vectorized.py) and both are held to the
+constructive goldens.
 
 Parity notes (verified by tests):
 - pandas ``.str.extract`` on the anchored payload regex == re.match;
@@ -86,53 +87,6 @@ def normalize_series(s: pd.Series) -> pd.Series:
     return s.str.replace(LONG_S, "s", regex=False)
 
 
-def denoise_batch(
-    doc_ids: list, spans_lists: list, params: Params, lexicon: Lexicon | None
-) -> list[list[dict]]:
-    """De-noise a batch of documents; returns output span lists aligned
-    with the input doc order (the list-of-dicts reference surface; the
-    Spark fused path goes through :func:`denoise_arrow_batch`)."""
-    n_docs = len(doc_ids)
-    didx, pos, kind, text, media_ref = [], [], [], [], []
-    for d, spans in enumerate(spans_lists):
-        for i, s in enumerate(spans):
-            didx.append(d)
-            pos.append(i)
-            kind.append(s["kind"])
-            text.append(s["text"])
-            media_ref.append(s["media_ref"])
-    if not didx:
-        return [[] for _ in range(n_docs)]
-
-    out_df = _denoise_flat(
-        np.asarray(didx, dtype=np.int64),
-        np.asarray(pos, dtype=np.int64),
-        kind,
-        text,
-        media_ref,
-        params,
-        lexicon,
-    )
-
-    results: list[list[dict]] = [[] for _ in range(n_docs)]
-    for d, kd, txt, mref in zip(
-        out_df["didx"].to_numpy(),
-        out_df["kind"].to_numpy(),
-        out_df["text"].to_numpy(),
-        out_df["media_ref"].to_numpy(),
-    ):
-        spans_out = results[d]
-        spans_out.append(
-            {
-                "kind": kd,
-                "text": None if txt is None or txt != txt else txt,
-                "media_ref": None if mref is None or mref != mref else mref,
-                "offset": len(spans_out),
-            }
-        )
-    return results
-
-
 def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     """De-noise one Arrow record batch of (doc_id, spans) rows and
     return the output record batch — the zero-dict boundary the fused
@@ -141,9 +95,9 @@ def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     The span columns are read FLAT off the list array's offsets/values
     buffers (no per-span Python dicts on ingest) and the output list
     array is rebuilt from the flat survivor columns + a bincount of
-    per-doc lengths (no per-span dict building on emit); the vectorized
-    rule itself (:func:`_denoise_flat`) is byte-identical to the
-    mapInPandas form (property-tested vs rules_np and the goldens)."""
+    per-doc lengths (no per-span dict building on emit). The
+    vectorized rule itself is :func:`_denoise_flat`; the output is
+    property-tested against rules_np and held to the goldens."""
     import pyarrow as pa
 
     doc_arr = rb.column(rb.schema.get_field_index("doc_id"))

@@ -75,3 +75,22 @@ def test_connect_fallback_reraises_real_errors():
 
     with pytest.raises(ValueError, match="cancelled"):
         observation_metrics(_Raises(), timeout_s=2.0)
+
+
+def test_pruned_node_is_empty_dict_timeout_is_none():
+    """A node that definitively reported nothing (pruned branch: the
+    execution-end event delivered a schema-less empty row) reads as
+    ``{}``; a node whose report never arrived reads as ``None``. The
+    batch job commits the first as zero counts and fails on the
+    second."""
+    import time
+    from types import SimpleNamespace as NS
+
+    def classic(defined):  # classic-API shape: bounded JVM read via _jo
+        opt = NS(isDefined=lambda: defined, get=lambda: NS(size=lambda: 0))
+        return NS(_jo=NS(getRowOrEmpty=lambda: opt))
+
+    assert observation_metrics(classic(True), timeout_s=2.0) == {}
+    t0 = time.time()
+    assert observation_metrics(classic(False), timeout_s=0.3) is None
+    assert time.time() - t0 < 5

@@ -9,7 +9,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.operators.pipeline import denoise_exploded
+from hocr_de_noising_spark.operators.pipeline import denoise_exploded, denoise_fused
 from hocr_de_noising_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -59,6 +59,18 @@ def test_exploded_pipeline_has_single_wide_exchange(spark, unit_dir):
     assert len(doc_exchanges) == 1, p
     # lexicon reaches the words via broadcast, not shuffle
     assert "BroadcastHashJoin" in p
+
+
+def test_fused_pipeline_is_single_map_in_arrow(spark, unit_dir):
+    """denoise_fused has one implementation: the executed plan crosses
+    into Python through MapInArrow, never the per-row-dict MapInPandas
+    boundary, and adds no exchange."""
+    docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
+    out = denoise_fused(docs, ["the"])
+    p = plan_str(out)
+    assert p.count("MapInArrow") == 1, p
+    assert "MapInPandas" not in p
+    assert "Exchange" not in p
 
 
 def test_denoise_patterns_keep_whole_stage_codegen(spark):

@@ -231,3 +231,40 @@ def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
     out = _read_all(spark, str(tmp_path / "out"))
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
+def test_observation_timeout_fails_group_without_done_rows(spark, loaded, tmp_path, monkeypatch):
+    """A df.observe read that times out must not commit 'done' rows
+    with zero counts: the job fails that group, leaves its buckets
+    uncommitted, and a resume re-runs it to the golden output."""
+    import hocr_de_noising_spark.checkpoint as checkpoint
+
+    docs, lexicon, golden = loaded
+    p = Params(n_buckets=16)
+    out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    real = checkpoint.observation_metrics
+    calls = []
+
+    def times_out_after_group_0(o, timeout_s=10.0):
+        # fused: one input and one output observation per group, so
+        # calls 1-2 are group 0's and call 3 is group 1's first read
+        calls.append(o)
+        return real(o, timeout_s) if len(calls) <= 2 else None
+
+    monkeypatch.setattr(checkpoint, "observation_metrics", times_out_after_group_0)
+    with pytest.raises(RuntimeError, match="group 1: df.observe metrics not delivered"):
+        run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
+                        run_id="r1", n_groups=4)
+    rows = ManifestCheckpoint(m_dir).read(spark).collect()
+    assert sorted(r.bucket for r in rows) == [0, 4, 8, 12]  # group 0 only
+    assert all(r.status == "done" for r in rows)
+
+    monkeypatch.setattr(checkpoint, "observation_metrics", real)
+    summary = run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
+                              run_id="r1", n_groups=4)
+    assert summary["groups_skipped"] == 1 and summary["groups_run"] == 3
+    m = ManifestCheckpoint(m_dir).read(spark).collect()
+    assert len(m) == 16 and sum(r.n_docs for r in m) == docs.count()
+    out = _read_all(spark, out_dir)
+    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0

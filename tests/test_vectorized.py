@@ -1,20 +1,34 @@
 """rules_vec (pandas/numpy batch engine) ≡ rules_np (reference), over
 the generator space, adversarial inputs, and both modes. Pure Python —
-no Spark session needed."""
+no Spark session needed: documents go through ``denoise_arrow_batch``,
+the kernel ``denoise_fused`` runs per mapInArrow batch."""
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
-from hocr_de_noising_spark.fixtures.spans import gen_doc
+from hocr_de_noising_spark.fixtures.spans import DOCS_SCHEMA, gen_doc
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc
-from hocr_de_noising_spark.rules_vec import denoise_batch
+from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
 
 LEX_TOKENS = [t for t, _ in gen_lexicon(1000, seed=7)]
 LEX = Lexicon(LEX_TOKENS)
+
+
+def denoise_batch(doc_ids, spans_lists, params, lexicon):
+    """Run lists of span dicts through the Arrow kernel; return the
+    output span lists in input doc order."""
+    rb = pa.RecordBatch.from_pylist(
+        [{"doc_id": d, "spans": s} for d, s in zip(doc_ids, spans_lists)],
+        schema=DOCS_SCHEMA,
+    )
+    out = denoise_arrow_batch(rb, params, lexicon).to_pylist()
+    assert [r["doc_id"] for r in out] == list(doc_ids)
+    return [r["spans"] for r in out]
 
 
 def _batch(n=80, seed=19):
