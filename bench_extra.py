@@ -91,11 +91,8 @@ def main() -> None:
         return
 
     jobs: dict = {}
-    if args.denoise or args.keys is None and not args.dedup_job and not args.hocr:
-        pass
     if args.denoise:
-        from pyspark.sql import functions as F  # noqa: F401
-
+        from hocr_de_noising_spark.operators.lexicon import lexicon_broadcast
         from hocr_de_noising_spark.operators.pipeline import (
             denoise_exploded,
             denoise_fused,
@@ -104,16 +101,14 @@ def main() -> None:
 
         docs = spark.read.parquet(os.path.join(bench_dir, "docs.parquet"))
         lexicon = spark.read.parquet(os.path.join(bench_dir, "lexicon.parquet"))
-        lex_tokens = [r.token for r in lexicon.select("token").collect()]
+        lex = lexicon_broadcast(spark, lexicon)  # outside the timed regions: same work per leaf
         warm = docs.limit(max(CPUS * 200, 2000)).repartition(CPUS)
-        _noop_write(denoise_fused(warm, lex_tokens))
-        _noop_write(denoise_exploded(warm, lexicon))
+        _noop_write(denoise_fused(warm, lex))
+        _noop_write(denoise_exploded(warm, lex))
         docs.count()
-        jobs["denoise_hybrid"] = lambda: _noop_write(
-            denoise_hybrid(docs, lexicon, lex_tokens)
-        )
-        jobs["denoise_fused"] = lambda: _noop_write(denoise_fused(docs, lex_tokens))
-        jobs["denoise_exploded"] = lambda: _noop_write(denoise_exploded(docs, lexicon))
+        jobs["denoise_hybrid"] = lambda: _noop_write(denoise_hybrid(docs, lex))
+        jobs["denoise_fused"] = lambda: _noop_write(denoise_fused(docs, lex))
+        jobs["denoise_exploded"] = lambda: _noop_write(denoise_exploded(docs, lex))
     if args.hocr:
         from hocr_de_noising_spark.fixtures.hocr import write_hocr_corpus
         from hocr_de_noising_spark.operators.hocr import parse_hocr, parse_hocr_auto

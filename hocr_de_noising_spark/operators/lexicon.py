@@ -13,7 +13,7 @@ X6 is a pure Column expression chain (JVM-side). X7 is two-tier:
 
 An alternative fully-relational blocked levenshtein join (length band +
 first/last char blocking) is provided for the driver's oracle-checked
-``dict_join`` query — see __spark_entry__.py.
+``dict_join`` query — see queries/relational.py.
 """
 
 from __future__ import annotations
@@ -21,12 +21,16 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.broadcast import Broadcast
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import LIGATURES, LONG_S, Lexicon
+
+LexiconLike = DataFrame | list[str] | Broadcast
 
 
 def normalize_col(token: Column) -> Column:
@@ -37,9 +41,22 @@ def normalize_col(token: Column) -> Column:
     return F.replace(out, F.lit(LONG_S), F.lit("s"))
 
 
+def lexicon_broadcast(spark: SparkSession, lexicon: LexiconLike) -> Broadcast:
+    """The one place the lexicon is collected and broadcast: a DataFrame
+    with a ``token`` column or a token list becomes a ``Broadcast`` of its
+    distinct non-NULL tokens, deduplicated on the driver (no ``distinct()``
+    shuffle) and read once per executor; a ``Broadcast`` passes through."""
+    if isinstance(lexicon, Broadcast):
+        return lexicon
+    if isinstance(lexicon, DataFrame):
+        lexicon = [r.token for r in lexicon.select("token").collect()]
+    tokens = list(dict.fromkeys(t for t in lexicon if t is not None))
+    return spark.sparkContext.broadcast(tokens)
+
+
 def with_dictionary_check(
     df: DataFrame,
-    lexicon_df: DataFrame,
+    lexicon: LexiconLike,
     params: Params | None = None,
 ) -> DataFrame:
     """Adds norm_token, f_dict_hit, f_dict_miss columns."""
@@ -50,16 +67,14 @@ def with_dictionary_check(
             "f_dict_miss", F.lit(False)
         )
 
-    lex = F.broadcast(lexicon_df.select(F.col("token").alias("lex_token")).distinct())
+    bc = lexicon_broadcast(df.sparkSession, lexicon)
+    # distinct already (no aggregate); an Arrow table plans as a LocalTableScan, no job
+    side = pa.table({"lex_token": pa.array(bc.value, pa.string())})
+    lex = F.broadcast(df.sparkSession.createDataFrame(side))
     df = df.join(lex, df["norm_token"] == lex["lex_token"], "left")
     df = df.withColumn("f_exact_hit", F.col("lex_token").isNotNull()).drop("lex_token")
 
     if p.max_edit_distance >= 1:
-        # no distinct(): the collect runs INSIDE the caller's timed
-        # region per query, a distinct adds a shuffle job for nothing —
-        # Lexicon dedups via set(tokens) (r8)
-        tokens = [r.token for r in lexicon_df.select("token").collect()]
-        bc = df.sparkSession.sparkContext.broadcast(tokens)
         fuzzy = _fuzzy_membership_udf(bc)
         oov = F.when(F.col("parse_ok") & ~F.col("f_exact_hit"), F.col("norm_token"))
         df = df.withColumn("f_fuzzy_hit", F.coalesce(fuzzy(oov), F.lit(False)))
@@ -72,22 +87,15 @@ def with_dictionary_check(
     )
 
 
-def _fuzzy_membership_udf(lex_tokens):
-    """Iterator pandas UDF: token within edit distance 1 of the lexicon.
-
-    ``lex_tokens`` is a ``sparkContext.broadcast`` handle (or a plain
-    list for tests): tasks pull the token list from the broadcast store
-    once per executor instead of shipping it in every task closure
-    (VERDICT r2 item 7). The symmetric-delete index is built once per
-    worker invocation and amortized over all Arrow batches (SURVEY.md
-    §2.10 iterator form).
-    """
-    from pyspark.broadcast import Broadcast
+def _fuzzy_membership_udf(lex_tokens: Broadcast):
+    """Iterator pandas UDF: token within edit distance 1 of the lexicon
+    broadcast ``lex_tokens``. The symmetric-delete index is built once
+    per worker invocation and amortized over all Arrow batches
+    (SURVEY.md §2.10 iterator form)."""
 
     @F.pandas_udf(BooleanType())
     def fuzzy(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        toks = lex_tokens.value if isinstance(lex_tokens, Broadcast) else lex_tokens
-        lex = Lexicon(toks)
+        lex = Lexicon(lex_tokens.value)
         for s in batches:
             mask = s.notna()
             out = pd.Series(False, index=s.index, dtype="boolean")

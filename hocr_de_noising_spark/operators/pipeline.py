@@ -28,8 +28,7 @@ each other on fresh seeds (tests/test_differential.py).
 
 from __future__ import annotations
 
-from pyspark.broadcast import Broadcast
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.operators.assemble import (
@@ -42,7 +41,11 @@ from hocr_de_noising_spark.operators.features import (
     with_noise_decision,
     with_text_flags,
 )
-from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
+from hocr_de_noising_spark.operators.lexicon import (
+    LexiconLike,
+    lexicon_broadcast,
+    with_dictionary_check,
+)
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import Lexicon
@@ -53,9 +56,16 @@ OUT_SCHEMA = (
 )
 
 
+def is_giant(p: Params) -> Column:
+    """Skew routing: a doc over max_spans_per_doc takes the exploded path.
+    coalesce: F.size(NULL) is NULL, which passes neither side; a null-spans
+    doc must take the fused path (spans=[]) to keep variants byte-identical."""
+    return F.coalesce(F.size("spans"), F.lit(0)) > p.max_spans_per_doc
+
+
 def denoise_exploded(
     docs: DataFrame,
-    lexicon_df: DataFrame,
+    lexicon: LexiconLike,
     params: Params | None = None,
 ) -> DataFrame:
     """Declarative Catalyst variant; see module docstring."""
@@ -77,7 +87,7 @@ def denoise_exploded(
     # exchange (ArrowEvalPython does not propagate partitioning), and
     # (b) token/norm_token/wconf are pruned before the shuffle —
     # only the payload, geometry ints and boolean flags cross the wire
-    ex = with_dictionary_check(ex, lexicon_df, params=p)
+    ex = with_dictionary_check(ex, lexicon, params=p)
     ex = with_text_flags(ex, params=p)
     ex = ex.select(
         "doc_id", "pos", "kind", "text", "media_ref", "parse_ok",
@@ -98,50 +108,38 @@ def denoise_exploded(
 
 def denoise_hybrid(
     docs: DataFrame,
-    lexicon_df: DataFrame,
-    lexicon_tokens: list[str],
+    lexicon: LexiconLike,
+    lexicon_tokens: list[str] | None = None,
     params: Params | None = None,
 ) -> DataFrame:
     """Skew-routing variant (J5 + §7.3 item 2): normal docs take the
     Arrow/pandas fused path (scales linearly — Python workers are
-    embarrassingly parallel); pathological giants (> max_spans_per_doc)
-    take the JVM exploded path, where a 100k-span doc is milliseconds of
+    embarrassingly parallel); pathological giants (``is_giant``) take
+    the JVM exploded path, where a 100k-span doc is milliseconds of
     window work instead of seconds of single-worker Python — removing
-    the serial tail that otherwise caps scaling efficiency."""
+    the serial tail that otherwise caps scaling efficiency. Both branches
+    share one resolved lexicon; ``lexicon_tokens``, if given, is its
+    already-collected form and is resolved in place of ``lexicon``."""
     p = params or Params()
-    # coalesce: F.size(NULL) is NULL, which passes NEITHER filter — a
-    # null-spans doc must take the fused path (emitting spans=[]) to
-    # keep the byte-identical cross-variant contract.
-    n_spans = F.coalesce(F.size("spans"), F.lit(0))
-    small = docs.filter(n_spans <= p.max_spans_per_doc)
-    big = docs.filter(n_spans > p.max_spans_per_doc)
-    return denoise_fused(small, lexicon_tokens, p).unionByName(
-        denoise_exploded(big, lexicon_df, p)
+    bc = lexicon_broadcast(docs.sparkSession, lexicon if lexicon_tokens is None else lexicon_tokens)
+    return denoise_fused(docs.filter(~is_giant(p)), bc, p).unionByName(
+        denoise_exploded(docs.filter(is_giant(p)), bc, p)
     )
 
 
 def denoise_fused(
     docs: DataFrame,
-    lexicon_tokens: "list[str] | Broadcast",
+    lexicon: LexiconLike,
     params: Params | None = None,
 ) -> DataFrame:
     """Single-pass mapInArrow variant of the frozen rule: each Arrow
     batch runs the pandas/numpy batch engine
     (rules_vec.denoise_arrow_batch — one regex extract and
     groupby-quantile per batch), property-tested against rules_np.
-
-    ``lexicon_tokens`` may be a plain list (broadcast here, once per
-    plan) or a pre-made ``sparkContext.broadcast`` shared across calls —
-    either way tasks deserialize the token list from the broadcast
-    store once per executor instead of once per task closure
-    (VERDICT r2 item 7).
-    """
+    ``lexicon`` is anything ``lexicon_broadcast`` accepts; pass its
+    ``Broadcast`` to share one copy across calls."""
     p = params or Params()
-    bc = (
-        lexicon_tokens
-        if isinstance(lexicon_tokens, Broadcast)
-        else docs.sparkSession.sparkContext.broadcast(list(lexicon_tokens or []))
-    )
+    bc = lexicon_broadcast(docs.sparkSession, lexicon)
 
     # Arrow-native boundary (r8, guide §4.2): spans are read flat off
     # the list array's offset/value buffers and the output list array

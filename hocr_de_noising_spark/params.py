@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -47,7 +47,7 @@ class Params:
 
     # X7 — dictionary / edit-distance check.
     use_dictionary: bool = True
-    max_edit_distance: int = 1
+    max_edit_distance: int = 1        # 0 = exact only; Lexicon has distance 1 only
 
     # X10 — rewrite mode: "drop" removes noise spans; "rewrite" keeps the
     # normalized token for dictionary-recoverable words, drops the rest.
@@ -64,6 +64,10 @@ class Params:
     n_buckets: int = 256
     salt: int = 42
     max_spans_per_doc: int = 50_000   # pre-split threshold for giant docs
+
+    def __post_init__(self):
+        if self.max_edit_distance not in (0, 1):
+            raise ValueError(f"max_edit_distance must be 0 or 1, got {self.max_edit_distance}")
 
     def to_dict(self) -> dict:
         return asdict(self)

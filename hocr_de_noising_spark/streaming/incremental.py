@@ -19,7 +19,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.operators.pipeline import OUT_SCHEMA, denoise_fused
+from hocr_de_noising_spark.operators.lexicon import LexiconLike, lexicon_broadcast
+from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from hocr_de_noising_spark.params import Params
 
 DOCS_DDL = (
@@ -33,7 +34,7 @@ EVENTS_DDL = (
 
 
 def make_denoise_sink(
-    output_dir: str, lexicon_tokens: list[str], params: Params
+    output_dir: str, lexicon: LexiconLike, params: Params
 ) -> Callable[[DataFrame, int], None]:
     """Idempotent foreachBatch sink: each micro-batch overwrites its own
     ``batch_id=N`` directory, so a batch retried after a partial write
@@ -41,9 +42,10 @@ def make_denoise_sink(
     upgrades foreachBatch's at-least-once re-delivery to exactly-once
     OUTPUT (the offset log in the checkpoint already makes the input
     side exactly-once). Readers see batch_id as a partition column."""
+    bc = lexicon_broadcast(SparkSession.active(), lexicon)  # once, not once per micro-batch
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = denoise_fused(batch_df, lexicon_tokens, params)
+        out = denoise_fused(batch_df, bc, params)
         out.write.mode("overwrite").parquet(
             os.path.join(output_dir, f"batch_id={batch_id}")
         )
@@ -56,7 +58,7 @@ def incremental_denoise_stream(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    lexicon_tokens: list[str],
+    lexicon: LexiconLike,
     params: Params | None = None,
 ):
     """ST1+ST5+ST6: readStream file source → exactly-once de-noising.
@@ -69,7 +71,7 @@ def incremental_denoise_stream(
     """
     p = params or Params()
     stream = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
-    sink = make_denoise_sink(output_dir, lexicon_tokens, p)
+    sink = make_denoise_sink(output_dir, lexicon, p)
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)

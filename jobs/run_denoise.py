@@ -82,7 +82,8 @@ def main(argv: list[str] | None = None) -> None:
         "--approx-stats",
         action="store_true",
         help="sketch-based page percentiles (X2/X3) — the 100 TB default;"
-        " exact interpolation is the golden-exact default here",
+        " exact interpolation is the golden-exact default here. Exploded-path"
+        " documents only (rejected with --variant fused)",
     )
     args = ap.parse_args(argv)
 

@@ -62,6 +62,7 @@ _WORKER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
 from hocr_de_noising_spark.session import get_spark
+from hocr_de_noising_spark.operators.lexicon import lexicon_broadcast
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from bench import calibrate_mpb
 docs_path, lex_path, cores = sys.argv[1], sys.argv[2], int(sys.argv[3])
@@ -70,12 +71,11 @@ spark = get_spark("scaleout-%d" % os.getpid(), cores=cores,
                   shuffle_partitions=cores * 2,
                   extra_conf={{"spark.sql.files.openCostInBytes": "512k"}})
 spark.sparkContext.setLogLevel("ERROR")
-lex = spark.read.parquet(lex_path)
-lex_tokens = [r.token for r in lex.select("token").collect()]
+lex = lexicon_broadcast(spark, spark.read.parquet(lex_path))
 calibrate_mpb(spark, docs_path, cores, waves=2)
 docs = spark.read.parquet(docs_path)
 warm = docs.limit(max(cores * 200, 2000)).repartition(cores)
-denoise_fused(warm, lex_tokens).write.format("noop").mode("overwrite").save()
+denoise_fused(warm, lex).write.format("noop").mode("overwrite").save()
 docs.count()
 open(os.path.join(barrier_dir, "ready-" + worker_id), "w").write("ok")
 _deadline = time.time() + 900
@@ -84,7 +84,7 @@ while not os.path.exists(os.path.join(barrier_dir, "go")):
         sys.exit(3)  # barrier never released -- die instead of orphaning
     time.sleep(0.05)
 t0 = time.time()
-denoise_fused(docs, lex_tokens).write.format("noop").mode("overwrite").save()
+denoise_fused(docs, lex).write.format("noop").mode("overwrite").save()
 print("WORKER_SEC %.3f" % (time.time() - t0), flush=True)
 spark.stop()
 """

@@ -90,3 +90,26 @@ def test_rewrite_mode_keeps_lowconf_dictionary_words(spark, unit_dir):
     tokens = [r.token for r in lexicon.select("token").collect()]
     fused = denoise_fused(docs, tokens, params=p)
     assert_docs_equal(out, fused)
+
+
+def test_null_lexicon_token_is_ignored(spark, unit_dir, tmp_path):
+    """A NULL token row in the lexicon changes nothing, on every variant
+    and through the job: the lexicon is resolved without NULLs, which
+    used to reach rules_np.Lexicon and raise TypeError on both Python
+    paths (fused kernel, exploded fuzzy UDF)."""
+    from hocr_de_noising_spark.checkpoint import run_denoise_job
+    from hocr_de_noising_spark.operators.pipeline import denoise_hybrid
+
+    docs, golden, lexicon = _load(spark, unit_dir)
+    with_null = lexicon.unionByName(spark.createDataFrame([(None, 1)], lexicon.schema))
+    tokens = [r.token for r in with_null.select("token").collect()]
+    assert None in tokens
+    p = Params(n_buckets=4, max_spans_per_doc=30)  # routes some unit docs to exploded
+    assert_docs_equal(denoise_exploded(docs, with_null), golden)
+    assert_docs_equal(denoise_fused(docs, tokens), golden)
+    assert_docs_equal(denoise_hybrid(docs, with_null, tokens, p), golden)
+    out_dir = str(tmp_path / "out")
+    summary = run_denoise_job(spark, docs, with_null, out_dir, str(tmp_path / "m"),
+                              params=p, run_id="r1", n_groups=2, variant="hybrid")
+    assert summary["giant_groups"] >= 1
+    assert_docs_equal(spark.read.parquet(out_dir).drop("bucket"), golden)

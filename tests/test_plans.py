@@ -53,10 +53,11 @@ def test_exploded_pipeline_has_single_wide_exchange(spark, unit_dir):
     out = denoise_exploded(docs, lexicon)
     p = plan_str(out)
     # one hash partitioning by doc_id for stats window; every later
-    # window/groupBy reuses it. (The tiny OOV-distinct side job adds
-    # exchanges on the lexicon/token side, not on the docs path.)
-    doc_exchanges = re.findall(r"Exchange hashpartitioning\(doc_id", p)
-    assert len(doc_exchanges) == 1, p
+    # window/groupBy reuses it, and the lexicon side adds none: it is
+    # deduplicated on the driver, not by an aggregate in the plan
+    assert p.count("Exchange hashpartitioning") == 1, p
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", p)) == 1, p
+    assert not re.search(r"HashAggregate\(keys=\[(lex_)?token", p), p
     # lexicon reaches the words via broadcast, not shuffle
     assert "BroadcastHashJoin" in p
 

@@ -131,3 +131,13 @@ def test_symmetric_delete_matches_brute_levenshtein():
     for t in probes:
         expect = any(_brute_lev_le1(t, w) for w in LEX_TOKENS[:200])
         assert lex_small.within_one(t) == expect, t
+
+
+@pytest.mark.parametrize("d", [-1, 2, 3])
+def test_params_reject_unimplemented_edit_distance(d):
+    """Lexicon implements distance 1 only and every path tests
+    ``max_edit_distance >= 1``, so any other value would silently run
+    as distance 0 or 1; Params refuses it instead."""
+    with pytest.raises(ValueError, match="max_edit_distance"):
+        Params(max_edit_distance=d)
+    assert Params(max_edit_distance=0).max_edit_distance == 0

@@ -183,6 +183,62 @@ def test_hybrid_probe_routes_giant_groups(spark, loaded, tmp_path):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
 
+def test_hybrid_job_resolves_lexicon_once(spark, loaded, tmp_path, monkeypatch):
+    """A hybrid job whose groups hold giants resolves (collects and
+    broadcasts) the lexicon once for the whole job: both branches of
+    every giant group get the job's handle instead of reading the table
+    again."""
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    import hocr_de_noising_spark.checkpoint as checkpoint
+    import hocr_de_noising_spark.operators.lexicon as lexicon_mod
+    import hocr_de_noising_spark.operators.pipeline as pipeline
+
+    docs, lexicon, golden = loaded
+    real_resolve, real_broadcast = lexicon_mod.lexicon_broadcast, SparkContext.broadcast
+    calls, broadcasts = [], []
+
+    def resolve(spark_, lex):
+        bc = real_resolve(spark_, lex)
+        calls.append((lex, bc))
+        return bc
+
+    def broadcast(self, value):
+        broadcasts.append(value)
+        return real_broadcast(self, value)
+
+    for mod in (checkpoint, lexicon_mod, pipeline):
+        monkeypatch.setattr(mod, "lexicon_broadcast", resolve)
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    p = Params(n_buckets=16, max_spans_per_doc=30)
+    summary = run_denoise_job(
+        spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
+        params=p, run_id="r1", n_groups=4, variant="hybrid",
+    )
+    assert summary["giant_groups"] >= 1
+    raw = [lex for lex, _ in calls if not isinstance(lex, Broadcast)]
+    assert len(raw) == 1 and raw[0] is lexicon  # the job's own resolve
+    assert len({id(bc) for _, bc in calls}) == 1  # one handle for every branch
+    assert len(calls) > 1 and len(broadcasts) == 1
+    out = _read_all(spark, str(tmp_path / "out"))
+    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
+def test_fused_job_rejects_approx_stats(spark, loaded, tmp_path):
+    """The fused kernel ignores approx_stats; a fused job asked for it
+    would write exact output under a params_hash that records
+    approximate stats, so it is refused before any Spark work."""
+    docs, lexicon, _ = loaded
+    with pytest.raises(ValueError, match="approx_stats"):
+        run_denoise_job(
+            spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
+            params=Params(n_buckets=16, approx_stats=True), run_id="r1", variant="fused",
+        )
+    assert not os.path.exists(tmp_path / "m") and not os.path.exists(tmp_path / "out")
+
+
 def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
     """ADVICE r2: a pre-existing bucket column bucketed under a
     different scheme must not be trusted — the job probes a sample and

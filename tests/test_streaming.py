@@ -137,6 +137,45 @@ def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     assert spark.read.parquet(stream_dirs["out"]).count() == 40
 
 
+def test_sink_broadcasts_lexicon_once_per_stream(spark, unit_dir, stream_dirs, monkeypatch):
+    """The sink broadcasts the lexicon once, when it is built: a stream
+    of several micro-batches must not store one more copy per batch."""
+    from pyspark import SparkContext
+
+    from hocr_de_noising_spark.params import Params
+    from hocr_de_noising_spark.streaming.incremental import DOCS_DDL, make_denoise_sink
+
+    docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
+    lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
+    tokens = [r.token for r in lexicon.select("token").collect()]
+    for half in (F.col("doc_id") < "d00000100", F.col("doc_id") >= "d00000100"):
+        docs.filter(half).coalesce(1).write.mode("append").parquet(stream_dirs["in"])
+
+    real = SparkContext.broadcast
+    calls = []
+
+    def counting_broadcast(self, value):
+        calls.append(value)
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+    sink = make_denoise_sink(stream_dirs["out"], tokens, Params())
+    q = (
+        spark.readStream.schema(DOCS_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dirs["in"])
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", stream_dirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batches = [d for d in os.listdir(stream_dirs["out"]) if d.startswith("batch_id=")]
+    assert len(batches) >= 2, batches
+    assert len(calls) == 1
+    assert spark.read.parquet(stream_dirs["out"]).count() == docs.count()
+
+
 def test_custom_stateful_operator_matches_batch(spark, sf001_dir, stream_dirs):
     """applyInPandasWithState custom operator: per-user running totals
     across TWO restarts must end exactly at the batch groupBy answer,
