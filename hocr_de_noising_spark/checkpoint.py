@@ -2,9 +2,11 @@
 
 The production design targets an Iceberg manifest table (snapshot
 lineage per bucket); this sandbox has no Iceberg runtime jar, so the
-manifest is a Parquet directory with atomic temp+rename commits — the
-protocol (bucket rows, params-hash lineage, anti-join resume) is
-identical (SURVEY.md §7.3 item 3).
+manifest is a Parquet directory with atomic temp+rename commits, read
+driver-side (``stage_manifest.CommitLog``, shared with the stage
+manifest) — the protocol (bucket rows, lineage, anti-join resume) is
+identical (SURVEY.md §7.3 item 3). A bucket counts as done for a run
+only under the same run_id, params_hash AND input_lineage.
 
 Bucket = pmod(xxhash64(doc_id, salt), n_buckets) — the salted doc_id
 hash partitioning from the north rule. The job loop processes bucket
@@ -19,19 +21,17 @@ idempotent. Per-group metrics ride the write action via df.observe.
 
 from __future__ import annotations
 
-import os
 import time
-import uuid
 from functools import reduce
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.obs import observation_metrics
 from hocr_de_noising_spark.operators.lexicon import LexiconLike, lexicon_broadcast
 from hocr_de_noising_spark.params import Params, params_hash
+from hocr_de_noising_spark.stage_manifest import CommitLog
 
 MANIFEST_SCHEMA = pa.schema(
     [
@@ -57,50 +57,15 @@ def bucket_col(doc_col: str, params: Params):
     ).cast("int")
 
 
-class ManifestCheckpoint:
-    """Parquet-backed manifest with atomic appends and resume reads."""
+class ManifestCheckpoint(CommitLog):
+    """Bucket manifest: one ``commit-*`` file per committed bucket group."""
 
-    def __init__(self, manifest_dir: str):
-        self.dir = manifest_dir
-        os.makedirs(manifest_dir, exist_ok=True)
-
-    def append_rows(self, rows: list[dict]) -> None:
-        """Atomically commit a batch of bucket rows (temp + rename)."""
-        if not rows:
-            return
-        cols = {f.name: [r[f.name] for r in rows] for f in MANIFEST_SCHEMA}
-        table = pa.Table.from_pydict(cols, schema=MANIFEST_SCHEMA)
-        tmp = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        final = os.path.join(self.dir, f"commit-{int(time.time()*1e6)}-{uuid.uuid4().hex[:8]}.parquet")
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        files = [f for f in os.listdir(self.dir) if f.endswith(".parquet")]
-        if not files:
-            return None
-        return spark.read.schema(
-            "run_id string, bucket int, n_docs long, n_spans_in long, "
-            "n_spans_out long, n_noise_dropped long, denoise_rate double, "
-            "input_lineage string, params_hash string, status string, "
-            "committed_at timestamp"
-        ).parquet(os.path.join(self.dir, "*.parquet"))
+    schema, prefix = MANIFEST_SCHEMA, "commit"
 
     def completed_buckets(self, spark: SparkSession, run_id: str, p_hash: str) -> set[int]:
-        """S7 resume source: buckets already done for this run lineage."""
-        df = self.read(spark)
-        if df is None:
-            return set()
-        rows = (
-            df.filter(
-                (F.col("run_id") == run_id)
-                & (F.col("params_hash") == p_hash)
-                & (F.col("status") == "done")
-            )
-            .select("bucket")
-            .collect()
-        )
-        return {r.bucket for r in rows}
+        """S7 resume source: buckets already done for this run lineage.
+        ``spark`` is unused (the read is driver-side pyarrow)."""
+        return {r["bucket"] for r in self.read(run_id=run_id, params_hash=p_hash, status="done")}
 
 
 def _bucket_metric_exprs(group_buckets: list[int], spans_expr):
@@ -136,9 +101,11 @@ def run_denoise_job(
 ) -> dict:
     """The resumable batch job (SURVEY.md §3.2 bucket loop).
 
-    Processes n_groups bucket groups; skips groups whose buckets are all
-    committed 'done' in the manifest. ``fail_after_group`` injects a
-    crash for the resume test. Returns summary metrics.
+    Processes n_groups bucket groups (``1 <= n_groups <= n_buckets``,
+    else ValueError); skips groups whose buckets are all committed
+    'done' in the manifest for this run_id, params hash and
+    ``input_lineage``. ``fail_after_group`` injects a crash for the
+    resume test. Returns summary metrics.
 
     Scale design (one action, one scan per group):
     - metrics come from ``df.observe`` (CollectMetrics) nodes on the
@@ -171,11 +138,13 @@ def run_denoise_job(
     )
 
     p = params or Params()
-    if variant == "fused" and p.approx_stats:
-        raise ValueError("approx_stats is read only by the exploded path; fused ignores it")
+    if not 1 <= n_groups <= p.n_buckets:
+        raise ValueError(f"n_groups must be in [1, n_buckets={p.n_buckets}], got {n_groups}")
     ph = params_hash(p)
     ckpt = ManifestCheckpoint(manifest_dir)
-    done = ckpt.completed_buckets(spark, run_id, ph)
+    # scoped to this input too: a run id reused over another input must not skip its buckets
+    done = {r["bucket"] for r in ckpt.read(run_id=run_id, params_hash=ph, status="done",
+                                           input_lineage=input_lineage)}
     lex = lexicon_broadcast(spark, lexicon)  # once per job; every branch shares it
 
     if "bucket" in docs.columns:

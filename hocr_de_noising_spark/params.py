@@ -53,13 +53,6 @@ class Params:
     # normalized token for dictionary-recoverable words, drops the rest.
     mode: str = "drop"
 
-    # X2/X3 at 100 TB: exact percentile forces a per-group sort; the
-    # approx mode swaps in approx_percentile (t-digest-style sketch,
-    # no sort, map-side combinable). Exact stays the default because
-    # the goldens are defined against exact linear interpolation.
-    approx_stats: bool = False
-    approx_stats_accuracy: int = 10_000
-
     # J5 / S5 — scale machinery.
     n_buckets: int = 256
     salt: int = 42
@@ -68,6 +61,8 @@ class Params:
     def __post_init__(self):
         if self.max_edit_distance not in (0, 1):
             raise ValueError(f"max_edit_distance must be 0 or 1, got {self.max_edit_distance}")
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
 
     def to_dict(self) -> dict:
         return asdict(self)

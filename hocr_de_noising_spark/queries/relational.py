@@ -784,8 +784,8 @@ def scalar_xml(spark, sf):
 def agg_approx_percentile(spark, sf):
     """A2 scale variant: approx_percentile (quantile sketch — no
     per-group sort, map-side combinable). The exact `agg_percentile`
-    key is the oracle-checked twin; this is the 100 TB default the
-    pipeline's Params.approx_stats switches to."""
+    key is the oracle-checked twin; the denoise pipeline keeps exact
+    percentiles, which its goldens interpolate."""
     sk = (
         load(spark, sf, "lineitem")
         .groupBy("l_returnflag")

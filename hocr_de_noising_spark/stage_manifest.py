@@ -1,16 +1,17 @@
-"""Stage-granular manifest for the composed jobs (VERDICT r3 item 8).
+"""One commit log for both resumable manifests (VERDICT r3 item 8).
 
-``checkpoint.ManifestCheckpoint`` makes the denoise job resumable at
-BUCKET granularity; the composed dedup/trainprep jobs materialize each
-stage to parquet but previously restarted from scratch on failure. This
-module records one row per completed stage (atomic temp+rename append,
-same pattern as the bucket manifest) so a restarted job skips stages
-whose outputs are already on disk and committed.
+``CommitLog`` is the protocol: each commit is one parquet file written
+to a dot-prefixed temp name and renamed, so a crash mid-append leaves
+only a ``.tmp-*`` file the reader skips. Reads are driver-side pyarrow
+(a handful of rows per commit; no Spark job needed). A binding supplies
+its schema and file prefix: ``checkpoint.ManifestCheckpoint``
+(``commit-*``) resumes the denoise job at BUCKET granularity;
+``StageManifest`` (``stage-*``) lets the composed dedup/trainprep jobs
+skip stages whose outputs are already on disk and committed.
 
 A stage row binds (run_id, job, stage) to a ``params_hash`` — resuming
 with different job parameters invalidates every prior row, because a
-stage's output depends on them. Reads are driver-side pyarrow (the
-manifest holds a handful of rows per run; no Spark job needed).
+stage's output depends on them.
 """
 
 from __future__ import annotations
@@ -43,56 +44,60 @@ def params_hash(**params) -> str:
     return hashlib.sha256(canon.encode()).hexdigest()[:16]
 
 
-class StageManifest:
-    """Parquet-backed per-stage commit log with atomic appends."""
+class CommitLog:
+    """Parquet commit log: atomic one-file appends and one filtered reader.
+
+    Subclasses set ``schema`` and ``prefix`` (the committed file names
+    are ``<prefix>-<micros>-<hex8>.parquet``)."""
+
+    schema: pa.Schema
+    prefix: str
 
     def __init__(self, manifest_dir: str):
         self.dir = manifest_dir
         os.makedirs(manifest_dir, exist_ok=True)
 
+    def append_rows(self, rows: list[dict]) -> None:
+        """Atomically commit a batch of rows (temp + rename)."""
+        if not rows:
+            return
+        tmp = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.parquet")
+        final = os.path.join(
+            self.dir, f"{self.prefix}-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet"
+        )
+        pq.write_table(pa.Table.from_pylist(rows, schema=self.schema), tmp)
+        os.rename(tmp, final)
+
+    def read(self, **where) -> list[dict]:
+        """Committed rows whose columns equal ``where`` (every row if
+        empty). The directory read skips dot-prefixed temp files."""
+        filters = [(col, "==", v) for col, v in where.items()] or None
+        return pq.read_table(self.dir, schema=self.schema, filters=filters).to_pylist()
+
+
+class StageManifest(CommitLog):
+    """Per-stage commit log: one ``stage-*`` file per completed stage."""
+
+    schema, prefix = STAGE_SCHEMA, "stage"
+
     def commit(
         self, run_id: str, job: str, stage: str, n_rows: int, secs: float, p_hash: str
     ) -> None:
-        table = pa.Table.from_pydict(
-            {
-                "run_id": [run_id],
-                "job": [job],
-                "stage": [stage],
-                "n_rows": [int(n_rows)],
-                "secs": [float(secs)],
-                "params_hash": [p_hash],
-                "status": ["done"],
-                "committed_at": [int(time.time() * 1e6)],
-            },
-            schema=STAGE_SCHEMA,
-        )
-        tmp = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        final = os.path.join(
-            self.dir, f"stage-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet"
-        )
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
+        self.append_rows([{
+            "run_id": run_id,
+            "job": job,
+            "stage": stage,
+            "n_rows": int(n_rows),
+            "secs": float(secs),
+            "params_hash": p_hash,
+            "status": "done",
+            "committed_at": int(time.time() * 1e6),
+        }])
 
     def completed(self, run_id: str, job: str, p_hash: str) -> set[str]:
         """Stages already committed 'done' for this run + param lineage."""
-        files = [
-            os.path.join(self.dir, f)
-            for f in os.listdir(self.dir)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-        if not files:
-            return set()
-        t = pa.concat_tables([pq.read_table(f) for f in files])
-        out = set()
-        for row in t.to_pylist():
-            if (
-                row["run_id"] == run_id
-                and row["job"] == job
-                and row["params_hash"] == p_hash
-                and row["status"] == "done"
-            ):
-                out.add(row["stage"])
-        return out
+        rows = self.read(run_id=run_id, job=job, params_hash=p_hash, status="done")
+        return {r["stage"] for r in rows}
 
 
 class _Skipped:

@@ -5,8 +5,9 @@
         --manifest <dir> --lexicon <path> [--buckets 256] [--salt 42] \
         [--groups 8] [--variant fused] [--mode drop] [--catalog parquet]
 
-Resumable: re-running with the same run-id + params skips committed
-bucket groups via the manifest (S7).
+Resumable: re-running with the same run-id, params and input skips
+committed bucket groups via the manifest (S7); the default run-id also
+depends on the input and --output.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hocr_de_noising_spark import stage_manifest  # noqa: E402
 from hocr_de_noising_spark.checkpoint import run_denoise_job  # noqa: E402
 from hocr_de_noising_spark.params import Params, params_hash  # noqa: E402
 from hocr_de_noising_spark.session import get_spark  # noqa: E402
@@ -78,13 +80,6 @@ def main(argv: list[str] | None = None) -> None:
         ".parquet — one extra pass over the (smaller) cleaned output,"
         " map-side + one bounded-frame window",
     )
-    ap.add_argument(
-        "--approx-stats",
-        action="store_true",
-        help="sketch-based page percentiles (X2/X3) — the 100 TB default;"
-        " exact interpolation is the golden-exact default here. Exploded-path"
-        " documents only (rejected with --variant fused)",
-    )
     args = ap.parse_args(argv)
 
     params = Params(
@@ -92,13 +87,17 @@ def main(argv: list[str] | None = None) -> None:
         mode=args.mode,
         n_buckets=args.buckets,
         salt=args.salt,
-        approx_stats=args.approx_stats,
     )
     spark = get_spark("hocr-denoise-job", cores=args.cores)
     catalog = Catalog(args.catalog)
     docs = catalog.read_docs(spark, args.input)
     lexicon = catalog.read(spark, args.lexicon)
-    run_id = args.run_id or f"run-{params_hash(params)}"
+    lineage = catalog.lineage(spark, args.input)
+    # the default run id names params, input AND output: two runs sharing
+    # a manifest must not resume each other's buckets
+    run_id = args.run_id or "run-" + stage_manifest.params_hash(
+        params=params_hash(params), input=lineage, output=args.output
+    )
 
     summary = run_denoise_job(
         spark,
@@ -109,7 +108,7 @@ def main(argv: list[str] | None = None) -> None:
         params=params,
         run_id=run_id,
         n_groups=args.groups,
-        input_lineage=catalog.lineage(spark, args.input),
+        input_lineage=lineage,
         variant=args.variant,
     )
     print(

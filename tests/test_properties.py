@@ -141,3 +141,10 @@ def test_params_reject_unimplemented_edit_distance(d):
     with pytest.raises(ValueError, match="max_edit_distance"):
         Params(max_edit_distance=d)
     assert Params(max_edit_distance=0).max_edit_distance == 0
+
+
+def test_params_reject_empty_bucket_space():
+    """Every doc hashes into pmod(.., n_buckets); zero buckets has no
+    valid bucket for any doc."""
+    with pytest.raises(ValueError, match="n_buckets"):
+        Params(n_buckets=0)

@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.checkpoint import ManifestCheckpoint, run_denoise_job
+from hocr_de_noising_spark.checkpoint import MANIFEST_SCHEMA, ManifestCheckpoint, run_denoise_job
 from hocr_de_noising_spark.params import Params, params_hash
+from hocr_de_noising_spark.stage_manifest import STAGE_SCHEMA, StageManifest
 
 
 @pytest.fixture()
@@ -38,13 +41,12 @@ def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark)
-    rows = m.collect()
+    rows = ManifestCheckpoint(str(tmp_path / "m")).read()
     assert len(rows) == 16  # one row per bucket
-    assert all(r.status == "done" and r.params_hash == params_hash(p) for r in rows)
-    assert sum(r.n_docs for r in rows) == docs.count()
-    assert all(r.n_noise_dropped == r.n_spans_in - r.n_spans_out for r in rows)
-    rates = [r.denoise_rate for r in rows if r.n_spans_in]
+    assert all(r["status"] == "done" and r["params_hash"] == params_hash(p) for r in rows)
+    assert sum(r["n_docs"] for r in rows) == docs.count()
+    assert all(r["n_noise_dropped"] == r["n_spans_in"] - r["n_spans_out"] for r in rows)
+    rates = [r["denoise_rate"] for r in rows if r["n_spans_in"]]
     assert all(0.0 <= x <= 1.0 for x in rates) and any(x > 0 for x in rates)
 
 
@@ -83,6 +85,84 @@ def test_params_change_invalidates_resume(spark, loaded, tmp_path):
     assert done == set()
 
 
+def test_resume_is_scoped_to_input_lineage(spark, loaded, tmp_path):
+    """A run id reused over a different input, sharing the manifest,
+    must not skip buckets that only the first input committed."""
+    docs, lexicon, golden = loaded
+    p = Params(n_buckets=16)
+    m_dir = str(tmp_path / "m")
+    first, second = docs.filter("doc_id < 'd00000098'"), docs.filter("doc_id >= 'd00000098'")
+    run_denoise_job(spark, first, lexicon, str(tmp_path / "out_a"), m_dir,
+                    params=p, run_id="r1", n_groups=4, input_lineage="A")
+    summary = run_denoise_job(spark, second, lexicon, str(tmp_path / "out_b"), m_dir,
+                              params=p, run_id="r1", n_groups=4, input_lineage="B")
+    assert summary["groups_skipped"] == 0 and summary["groups_run"] == 4
+    assert summary["n_docs"] == second.count() == 102
+    out = _read_all(spark, str(tmp_path / "out_b"))
+    ref = golden.join(second.select("doc_id"), "doc_id")
+    j = out.alias("o").join(ref.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+    # the unscoped three-argument read still sees every bucket of the run
+    done = ManifestCheckpoint(m_dir).completed_buckets(spark, "r1", params_hash(p))
+    assert done == set(range(16))
+
+
+@pytest.mark.parametrize("n_groups", [0, 17])
+def test_job_rejects_out_of_range_group_count(spark, loaded, tmp_path, n_groups):
+    """0 groups would run nothing; more groups than buckets would report
+    empty groups as skipped. Both are refused before any Spark work."""
+    docs, lexicon, _ = loaded
+    with pytest.raises(ValueError, match="n_groups"):
+        run_denoise_job(spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
+                        params=Params(n_buckets=16), run_id="r1", n_groups=n_groups)
+    assert not os.path.exists(tmp_path / "m") and not os.path.exists(tmp_path / "out")
+
+
+_NOW = 1_700_000_000_000_000
+_BINDINGS = {
+    "bucket": (
+        ManifestCheckpoint, MANIFEST_SCHEMA, "commit",
+        {"run_id": "r1", "bucket": 3, "n_docs": 2, "n_spans_in": 9, "n_spans_out": 7,
+         "n_noise_dropped": 2, "denoise_rate": 2 / 9, "input_lineage": "", "params_hash": "h",
+         "status": "done", "committed_at": _NOW},
+        lambda m: m.completed_buckets(None, "r1", "h"), {3},
+    ),
+    "stage": (
+        StageManifest, STAGE_SCHEMA, "stage",
+        {"run_id": "r1", "job": "dedup", "stage": "exact", "n_rows": 5, "secs": 1.5,
+         "params_hash": "h", "status": "done", "committed_at": _NOW},
+        lambda m: m.completed("r1", "dedup", "h"), {"exact"},
+    ),
+}
+
+
+@pytest.mark.parametrize("binding", sorted(_BINDINGS))
+def test_commit_log_reads_existing_layout_and_skips_torn_temp(tmp_path, binding):
+    """Both manifests share one commit log. A directory written in the
+    established layout (``<prefix>-<micros>-<hex8>.parquet``, same
+    schema) resumes, and a truncated ``.tmp-*`` file left by a crash
+    mid-append is invisible to the reader and to resume."""
+    cls, schema, prefix, row, resume, expect = _BINDINGS[binding]
+    d = tmp_path / "m"
+    d.mkdir()
+    table = pa.Table.from_pydict({k: [v] for k, v in row.items()}, schema=schema)
+    pq.write_table(table, d / f"{prefix}-{_NOW}-0123abcd.parquet")
+    whole = pa.BufferOutputStream()
+    pq.write_table(table, whole)
+    torn = whole.getvalue().to_pybytes()
+    (d / f".tmp-{'0' * 32}.parquet").write_bytes(torn[: len(torn) // 2])
+
+    m = cls(str(d))
+    assert resume(m) == expect
+    assert m.read() == table.to_pylist()
+    m.append_rows([{**row, "run_id": "r2"}])
+    assert sorted(r["run_id"] for r in m.read()) == ["r1", "r2"]
+    assert resume(m) == expect
+    names = sorted(os.listdir(d))
+    assert len(names) == 3 and names[0].startswith(".tmp-")
+    assert all(n.startswith(f"{prefix}-") for n in names[1:])
+
+
 def test_sparse_input_empty_groups_do_not_crash(spark, loaded, tmp_path):
     """ADVICE r1: a bucket group with zero docs used to crash the
     metrics read-back (UNABLE_TO_INFER_SCHEMA). With observe-based
@@ -95,10 +175,10 @@ def test_sparse_input_empty_groups_do_not_crash(spark, loaded, tmp_path):
         params=p, run_id="r1", n_groups=4,
     )
     assert summary["groups_run"] == 4 and summary["n_docs"] == 1
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
+    m = ManifestCheckpoint(str(tmp_path / "m")).read()
     assert len(m) == 16
-    assert sum(r.n_docs for r in m) == 1
-    assert all(r.n_spans_out <= r.n_spans_in for r in m)
+    assert sum(r["n_docs"] for r in m) == 1
+    assert all(r["n_spans_out"] <= r["n_spans_in"] for r in m)
     assert spark.read.parquet(str(tmp_path / "out")).count() == 1
 
 
@@ -142,10 +222,10 @@ def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path)
     # committed and pending buckets
     run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                     run_id="r1", n_groups=2)
-    m = ManifestCheckpoint(m_dir).read(spark).collect()
+    m = ManifestCheckpoint(m_dir).read()
     assert len(m) == 16  # exactly one row per bucket — no duplicates
-    assert len({r.bucket for r in m}) == 16
-    assert sum(r.n_docs for r in m) == docs.count()
+    assert len({r["bucket"] for r in m}) == 16
+    assert sum(r["n_docs"] for r in m) == docs.count()
 
 
 def test_hybrid_probe_skips_exploded_branch_without_giants(spark, loaded, tmp_path):
@@ -226,19 +306,6 @@ def test_hybrid_job_resolves_lexicon_once(spark, loaded, tmp_path, monkeypatch):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
 
-def test_fused_job_rejects_approx_stats(spark, loaded, tmp_path):
-    """The fused kernel ignores approx_stats; a fused job asked for it
-    would write exact output under a params_hash that records
-    approximate stats, so it is refused before any Spark work."""
-    docs, lexicon, _ = loaded
-    with pytest.raises(ValueError, match="approx_stats"):
-        run_denoise_job(
-            spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
-            params=Params(n_buckets=16, approx_stats=True), run_id="r1", variant="fused",
-        )
-    assert not os.path.exists(tmp_path / "m") and not os.path.exists(tmp_path / "out")
-
-
 def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
     """ADVICE r2: a pre-existing bucket column bucketed under a
     different scheme must not be trusted — the job probes a sample and
@@ -256,9 +323,9 @@ def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
     assert out.count() == docs.count()
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
-    assert sum(r.n_docs for r in m) == docs.count()
-    assert len({r.bucket for r in m if r.n_docs > 0}) > 1
+    m = ManifestCheckpoint(str(tmp_path / "m")).read()
+    assert sum(r["n_docs"] for r in m) == docs.count()
+    assert len({r["bucket"] for r in m if r["n_docs"] > 0}) > 1
 
 
 def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
@@ -311,16 +378,16 @@ def test_observation_timeout_fails_group_without_done_rows(spark, loaded, tmp_pa
     with pytest.raises(RuntimeError, match="group 1: df.observe metrics not delivered"):
         run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                         run_id="r1", n_groups=4)
-    rows = ManifestCheckpoint(m_dir).read(spark).collect()
-    assert sorted(r.bucket for r in rows) == [0, 4, 8, 12]  # group 0 only
-    assert all(r.status == "done" for r in rows)
+    rows = ManifestCheckpoint(m_dir).read()
+    assert sorted(r["bucket"] for r in rows) == [0, 4, 8, 12]  # group 0 only
+    assert all(r["status"] == "done" for r in rows)
 
     monkeypatch.setattr(checkpoint, "observation_metrics", real)
     summary = run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                               run_id="r1", n_groups=4)
     assert summary["groups_skipped"] == 1 and summary["groups_run"] == 3
-    m = ManifestCheckpoint(m_dir).read(spark).collect()
-    assert len(m) == 16 and sum(r.n_docs for r in m) == docs.count()
+    m = ManifestCheckpoint(m_dir).read()
+    assert len(m) == 16 and sum(r["n_docs"] for r in m) == docs.count()
     out = _read_all(spark, out_dir)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
